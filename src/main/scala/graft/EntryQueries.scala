@@ -612,7 +612,7 @@ object EntryQueries {
     // (guide §2.6 overlap). Result identical: the manifest's batch ORDER
     // is commit-completion order, but the lineage rollup groups by
     // batch_id — invariant.
-    runConcurrently(batches) { b =>
+    runConcurrently(s, batches) { b =>
       val lo = n * b / batches; val hi = n * (b + 1) / batches
       val images = ImageTable.metaDf(s, lo, hi)
         .withColumn("lon", SpatialOps.phashLon(col("phash")))
@@ -647,7 +647,7 @@ object EntryQueries {
     val n = Math.min(imageCount(dir), 20000L)
     val batches = 2
     // independent commits overlapped, as in q27 (guide §2.6)
-    runConcurrently(batches) { b =>
+    runConcurrently(s, batches) { b =>
       val lo = n * b / batches; val hi = n * (b + 1) / batches
       val images = ImageTable.metaDf(s, lo, hi)
         .withColumn("lon", SpatialOps.phashLon(col("phash")))
@@ -666,16 +666,32 @@ object EntryQueries {
     * backfills one job's straggler tail with the next job's tasks; FIFO
     * default is exactly the desired behavior). Job descriptions and other
     * thread-locals are per-thread, so concurrent jobs stay labeled.
-    * Exceptions rethrow the first cause. */
-  private def runConcurrently(n: Int)(body: Int => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    * On the first failure the siblings' Spark jobs are cancelled (every job
+    * they start carries one job tag) until all of them have returned; then
+    * the failure's cause rethrows, so no body outlives the call. */
+  private[graft] def runConcurrently(s: SparkSession, n: Int)(body: Int => Unit): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val sc = s.sparkContext
+    val tag = s"graft-concurrent-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(n)
+    val done = new ExecutorCompletionService[Unit](pool)
     try {
-      val futs = (0 until n).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = body(i) })
+      (0 until n).foreach { i =>
+        done.submit(new Callable[Unit] {
+          def call(): Unit = { sc.addJobTag(tag); sc.setInterruptOnCancel(true); body(i) }
+        })
       }
-      futs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      // bodies in completion order, so the first failure is seen at once
+      (0 until n).foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          pool.shutdown()
+          // a sibling between two jobs starts the next one after a cancel:
+          // keep cancelling until every body has returned
+          do sc.cancelJobsWithTag(tag)
+          while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+          throw e.getCause
+        }
       }
     } finally { pool.shutdown(); () }
   }

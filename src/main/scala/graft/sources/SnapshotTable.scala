@@ -1,11 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, Path}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.{Json, JValue, JObj, JArr, JStr, JNum}
 
@@ -22,8 +22,14 @@ import graft.core.{Json, JValue, JObj, JArr, JStr, JNum}
   *
   * Each snapshot records, per committed batch: the data files, row count,
   * an order-independent content fingerprint (XOR of per-row xxhash64 over
-  * all columns — identical at any parallelism), and per-bucket lineage
-  * metrics (rows + fingerprint per z-order bucket). This gives:
+  * all columns — identical at any parallelism), per-bucket lineage metrics
+  * (rows + fingerprint per z-order bucket) and per-file [min,max] bucket
+  * stats. The parquet writers fold these while they write the rows
+  * ([[LineageParquetFormat]]), so a commit is one write job plus a
+  * manifest publish — the written files are never scanned again. Bucket
+  * ids and fingerprints are stored as unsigned hex strings (exact for
+  * 64-bit cell ids); manifests that stored bucket ids as JSON numbers
+  * still parse. This gives:
   *
   *  - exact resume: a re-run skips batches already in the manifest and
   *    produces a byte-identical table (checkpoint/resume mandate)
@@ -74,6 +80,8 @@ object SnapshotTable {
     else parseSnapshot(Files.readString(snapDir(table).resolve(s"v$v.json")))
   }
 
+  private def hex(v: Long): JStr = JStr(java.lang.Long.toHexString(v))
+
   private def renderSnapshot(s: Snapshot): String =
     JObj.of(
       "version" -> JNum(s.version),
@@ -82,14 +90,14 @@ object SnapshotTable {
           "batchId" -> JStr(b.batchId),
           "files" -> JArr(b.files.map(JStr(_))),
           "rows" -> JNum(b.rows),
-          "fingerprint" -> JStr(java.lang.Long.toHexString(b.fingerprint)),
+          "fingerprint" -> hex(b.fingerprint),
           "buckets" -> JArr(b.buckets.map { st =>
-            JObj.of("bucket" -> JNum(st.bucket), "rows" -> JNum(st.rows),
-              "fingerprint" -> JStr(java.lang.Long.toHexString(st.fingerprint)))
+            JObj.of("bucket" -> hex(st.bucket), "rows" -> JNum(st.rows),
+              "fingerprint" -> hex(st.fingerprint))
           }),
           "fileStats" -> JArr(b.fileStats.map { fs =>
-            JObj.of("file" -> JStr(fs.file), "minBucket" -> JNum(fs.minBucket),
-              "maxBucket" -> JNum(fs.maxBucket), "rows" -> JNum(fs.rows))
+            JObj.of("file" -> JStr(fs.file), "minBucket" -> hex(fs.minBucket),
+              "maxBucket" -> hex(fs.maxBucket), "rows" -> JNum(fs.rows))
           }))
       })).render
 
@@ -97,32 +105,39 @@ object SnapshotTable {
     val o = Json.parse(s).asInstanceOf[JObj]
     def num(v: JValue): Double = v.asInstanceOf[JNum].v
     def str(v: JValue): String = v.asInstanceOf[JStr].v
+    def long(v: JValue): Long = v match {
+      case JStr(h) => java.lang.Long.parseUnsignedLong(h, 16)
+      case JNum(d) => d.toLong // bucket ids of manifests written as JSON numbers
+      case other => throw new IllegalArgumentException(s"not a manifest long: $other")
+    }
     val batches = o("batches").asInstanceOf[JArr].items.map { bv =>
       val b = bv.asInstanceOf[JObj]
       Batch(
         str(b("batchId")),
         b("files").asInstanceOf[JArr].items.map(str),
         num(b("rows")).toLong,
-        java.lang.Long.parseUnsignedLong(str(b("fingerprint")), 16),
+        long(b("fingerprint")),
         b("buckets").asInstanceOf[JArr].items.map { sv =>
           val st = sv.asInstanceOf[JObj]
-          BucketStat(num(st("bucket")).toLong, num(st("rows")).toLong,
-            java.lang.Long.parseUnsignedLong(str(st("fingerprint")), 16))
+          BucketStat(long(st("bucket")), num(st("rows")).toLong, long(st("fingerprint")))
         },
         // absent in pre-round-2 manifests: falls back to no file skipping
         b.get("fileStats").map(_.asInstanceOf[JArr].items.map { fv =>
           val fs = fv.asInstanceOf[JObj]
-          FileStat(str(fs("file")), num(fs("minBucket")).toLong,
-            num(fs("maxBucket")).toLong, num(fs("rows")).toLong)
+          // a JSON-number range is only as exact as a double: widen it by an
+          // ulp each way so readRange never skips a file with rows in range
+          def bound(v: JValue, dir: Int): Long = v match {
+            case JNum(d) => d.toLong + dir * math.ulp(d).toLong
+            case _ => long(v)
+          }
+          FileStat(str(fs("file")), bound(fs("minBucket"), -1), bound(fs("maxBucket"), 1),
+            num(fs("rows")).toLong)
         }).getOrElse(Vector.empty))
     }
     Snapshot(num(o("version")).toInt, batches)
   }
 
   // ---------------- write path ----------------
-
-  /** Order-independent row fingerprint: xxhash64 over all columns. */
-  private def rowHash(df: DataFrame) = xxhash64(df.columns.map(col): _*)
 
   /** Commit one batch: skip if `batchId` is already in the manifest (exact
     * resume). Data is partitioned on `bucketCol` into `numPartitions` files
@@ -158,9 +173,11 @@ object SnapshotTable {
     // batch's data files are untouched (they live under this batchId's own
     // dir), so re-reading the winner's snapshot and re-appending is safe —
     // unless the winner already committed this very batchId (resume race).
+    // The snapshot parsed above is reused unless another writer published
+    // during the write; a conflict always re-reads.
+    var cur = if (currentVersion(table) == snap.version) snap else currentSnapshot(table)
     var attempts = 0
     while (true) {
-      val cur = currentSnapshot(table)
       if (cur.batchIds.contains(batchId)) return false
       try {
         publish(table, Snapshot(cur.version + 1, cur.batches :+ batch))
@@ -174,6 +191,7 @@ object SnapshotTable {
           attempts += 1
           if (attempts >= 24) throw e
           Thread.sleep(7L * attempts)
+          cur = currentSnapshot(table)
       }
     }
     false // unreachable
@@ -184,57 +202,38 @@ object SnapshotTable {
   private def writeBatch(df: DataFrame, table: String, batchId: String,
       bucketCol: String, sortCols: Seq[String], numPartitions: Int,
       zOrderRes: Int): Batch = {
+    require(df.schema(bucketCol).dataType == LongType,
+      s"bucket column $bucketCol must be a long, got ${df.schema(bucketCol).dataType}")
     val batchDir = Paths.get(table, "data", s"b$batchId")
     // clean leftovers from a killed writer (invisible to readers anyway)
     if (Files.exists(batchDir)) deleteRec(batchDir)
 
-    val dataCols = df.columns.toSeq
-    if (zOrderRes >= 0) {
+    val writer = if (zOrderRes >= 0) {
       // z-order block = high bits of the cell's morton code — a pure
       // function of the value. partitionBy makes the block a DIRECTORY, so
       // each data file holds exactly one contiguous morton block: per-file
-      // [min,max] stats become tight and readRange skips precisely,
-      // independent of how block ids hash across shuffle tasks.
+      // [min,max] stats become tight and readRange skips precisely. Blocks
+      // are placed on tasks by id (block mod n), not by hash, so no two
+      // blocks share a write task while another task sits empty.
       val block = graft.operators.SpatialOps.zBlock(col(bucketCol), zOrderRes, numPartitions)
       df.withColumn("__zblock", block)
-        .repartition(numPartitions, col("__zblock"))
+        .repartitionById(numPartitions, pmod(col("__zblock"), lit(numPartitions.toLong)).cast("int"))
         .sortWithinPartitions(col("__zblock") +: (bucketCol +: sortCols).map(col): _*)
-        .write.mode("overwrite").partitionBy("__zblock").parquet(batchDir.toString)
+        .write.partitionBy("__zblock")
     } else {
       // generic buckets: hash placement (byte-stable; each bucket whole in
       // one file) — no cross-file range clustering, readRange reads all
       df.repartition(numPartitions, col(bucketCol))
         .sortWithinPartitions((bucketCol +: sortCols).map(col): _*)
-        .write.mode("overwrite").parquet(batchDir.toString)
+        .write
     }
-
-    // lineage metrics from what was actually written (drop the inferred
-    // __zblock partition column: fingerprints cover the data columns only).
-    // ONE read-back aggregation keyed by (file, bucket) feeds BOTH the
-    // per-bucket lineage and the per-file [min,max] manifest stats —
-    // bounded by files × buckets rows, folded driver-side.
-    val spark = df.sparkSession
-    val written = spark.read.parquet(batchDir.toString)
-      .select(dataCols.map(col): _*)
-    // relative path key (NOT the leaf name: under partitionBy a task
-    // writing two blocks emits the same part-XXXX leaf in two dirs)
-    val relMarker = s"/b$batchId/"
-    val fineStats = written
-      .groupBy(input_file_name().as("f"), col(bucketCol).as("bucket"))
-      .agg(count(lit(1)).as("rows"),
-        // XOR-fold of row hashes: associative+commutative → deterministic
-        expr(s"bit_xor(${fpExpr(written)})").as("fp"))
-      .collect().map { r =>
-        val uri = r.getString(0)
-        (uri.substring(uri.lastIndexOf(relMarker) + relMarker.length),
-          r.getLong(1), r.getLong(2), r.getLong(3))
-      }
-    val bucketStats = fineStats.groupBy(_._2).map { case (bucket, xs) =>
-      BucketStat(bucket, xs.map(_._3).sum, xs.map(_._4).foldLeft(0L)(_ ^ _))
-    }.toVector.sortBy(_.bucket)
-    val dataFileStats = fineStats.groupBy(_._1).map { case (rel, xs) =>
-      rel -> FileStat(rel, xs.map(_._2).min, xs.map(_._2).max, xs.map(_._3).sum)
-    }.toMap
+    // per-file, per-bucket lineage is folded by the parquet writers from
+    // the rows they write (__zblock is a directory, not a data column, so
+    // fingerprints cover the data columns only)
+    val written = LineageParquetFormat.record(df.sparkSession, bucketCol) { opts =>
+      writer.format(classOf[LineageParquetFormat].getName).options(opts)
+        .mode("overwrite").save(batchDir.toString)
+    }
 
     val walk = Files.walk(batchDir)
     val files =
@@ -243,10 +242,20 @@ object SnapshotTable {
         .map(p => batchDir.relativize(p).toString)
         .toVector.sorted
       finally walk.close()
-    // a listed file with no stats row holds no rows → empty [min > max]
-    // range, always skippable
-    val fileStats = files.map(f =>
-      dataFileStats.getOrElse(f, FileStat(f, 0L, -1L, 0L)))
+    val byFile = written.map(f => f.file -> f.buckets).toMap
+    if (byFile.size != written.size || byFile.keySet != files.toSet)
+      throw new IllegalStateException(s"batch $batchId: writer stats cover " +
+        s"${written.map(_.file).sorted.mkString(", ")} but the committed files are " +
+        files.mkString(", "))
+    // a file that got no rows has the empty [min > max] range, always skippable
+    val fileStats = files.map { f =>
+      val bs = byFile(f)
+      if (bs.isEmpty) FileStat(f, 0L, -1L, 0L)
+      else FileStat(f, bs.map(_.bucket).min, bs.map(_.bucket).max, bs.map(_.rows).sum)
+    }
+    val bucketStats = written.flatMap(_.buckets).groupBy(_.bucket).map { case (bucket, xs) =>
+      BucketStat(bucket, xs.map(_.rows).sum, xs.map(_.fingerprint).foldLeft(0L)(_ ^ _))
+    }.toVector.sortBy(_.bucket)
     val totalRows = bucketStats.map(_.rows).sum
     val totalFp = bucketStats.map(_.fingerprint).foldLeft(0L)(_ ^ _)
 
@@ -349,9 +358,6 @@ object SnapshotTable {
     gone.foreach(deleteRec)
     gone.map(_.getFileName.toString)
   }
-
-  private def fpExpr(df: DataFrame): String =
-    s"xxhash64(${df.columns.mkString(", ")})"
 
   // ---------------- read path ----------------
 

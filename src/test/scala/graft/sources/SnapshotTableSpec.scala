@@ -1,9 +1,17 @@
 package graft.sources
 
+import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.{JArr, JNum, JObj, JStr, JValue, Json}
 import graft.functions.{st, SparkTestSession}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import SnapshotTable.{Batch, BucketStat, FileStat}
 
 class SnapshotTableSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -17,6 +25,36 @@ class SnapshotTableSpec extends AnyFunSuite {
       .select(col("id"),
         st.mix64(col("id")).as("payload"),
         pmod(st.mix64(col("id") + 7), lit(64L)).as("bucket"))
+
+  /** The lineage the commit path computed before the writers recorded it
+    * — kept as the oracle: scan the batch's written files, aggregate rows
+    * and the XOR of `xxhash64(<data columns>)` per (file, bucket), and
+    * fold that into per-bucket and per-file stats. */
+  private def readBackLineage(table: String, b: Batch): (Vector[BucketStat], Vector[FileStat]) = {
+    val written = spark.read.parquet(Paths.get(table, "data", s"b${b.batchId}").toString)
+      .drop("__zblock")
+    val marker = s"/b${b.batchId}/"
+    val fine = written
+      .groupBy(input_file_name().as("f"), col("bucket"))
+      .agg(count(lit(1)), expr(s"bit_xor(xxhash64(${written.columns.mkString(", ")}))"))
+      .collect().toVector.map { r =>
+        val uri = r.getString(0)
+        (uri.substring(uri.lastIndexOf(marker) + marker.length), r.getLong(1), r.getLong(2), r.getLong(3))
+      }
+    val buckets = fine.groupBy(_._2).map { case (bucket, xs) =>
+      BucketStat(bucket, xs.map(_._3).sum, xs.map(_._4).foldLeft(0L)(_ ^ _))
+    }.toVector.sortBy(_.bucket)
+    val files = fine.groupBy(_._1).map { case (f, xs) =>
+      FileStat(f, xs.map(_._2).min, xs.map(_._2).max, xs.map(_._3).sum)
+    }.toVector.sortBy(_.file)
+    (buckets, files)
+  }
+
+  /** A manifest batch with the job UUID taken out of its file names. */
+  private def nameless(b: Batch): Batch = {
+    def strip(f: String) = f.replaceAll("-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "")
+    b.copy(files = b.files.map(strip), fileStats = b.fileStats.map(fs => fs.copy(file = strip(fs.file))))
+  }
 
   test("commit + read-back + lineage metrics") {
     val dir = freshDir()
@@ -35,11 +73,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   test("manifest file skipping: readRange prunes files under z-order layout") {
     val dir = freshDir()
     // cell-id buckets at res 5 (the zOrderRes layout contract)
-    val df = spark.range(0, 20000, 1, 8)
-      .select(col("id"),
-        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
-        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
-      .select(col("id"), st.cellId(col("lon"), col("lat"), 5).as("bucket"))
+    val df = SnapshotTableSpec.cellDf(spark, 20000, res = 5)
     assert(SnapshotTable.commitBatch(df, dir, "b0", "bucket", Seq("id"),
       numPartitions = 8, zOrderRes = 5))
     val snap = SnapshotTable.currentSnapshot(dir)
@@ -133,11 +167,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("compact preserves z-order fileStats: readRange still skips files") {
     val dir = freshDir()
-    val df = spark.range(0, 20000, 1, 8)
-      .select(col("id"),
-        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
-        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
-      .select(col("id"), st.cellId(col("lon"), col("lat"), 5).as("bucket"))
+    val df = SnapshotTableSpec.cellDf(spark, 20000, res = 5)
     assert(SnapshotTable.commitBatch(df.filter(col("id") < 10000), dir, "b0", "bucket",
       Seq("id"), numPartitions = 8, zOrderRes = 5))
     assert(SnapshotTable.commitBatch(df.filter(col("id") >= 10000), dir, "b1", "bucket",
@@ -296,4 +326,149 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
     assert(bytes(a) == bytes(b))
   }
+
+  test("writer-recorded lineage equals a read-back of the written files") {
+    val cells = SnapshotTableSpec.cellDf(spark, 12000, res = 5)
+    for (n <- Seq(4, 6, 8, 16); zOrder <- Seq(true, false)) {
+      val dir = freshDir()
+      if (zOrder) assert(SnapshotTable.commitBatch(cells, dir, "b0", "bucket", Seq("id"),
+        numPartitions = n, zOrderRes = 5))
+      else assert(SnapshotTable.commitBatch(batchDf(0, 12000, 8), dir, "b0", "bucket", Seq("id"),
+        numPartitions = n))
+      val b = SnapshotTable.currentSnapshot(dir).batches.head
+      val (buckets, files) = readBackLineage(dir, b)
+      val layout = s"${if (zOrder) "z-order" else "hash"} layout, $n partitions"
+      assert(b.buckets == buckets, layout)
+      assert(b.fileStats.sortBy(_.file) == files, layout)
+      assert(b.rows == 12000 && b.fingerprint == buckets.map(_.fingerprint).reduce(_ ^ _), layout)
+    }
+  }
+
+  test("manifest stores 64-bit bucket ids exactly; older number-valued manifests still parse") {
+    val dir = freshDir()
+    val df = SnapshotTableSpec.cellDf(spark, 20000, res = 7)
+    assert(SnapshotTable.commitBatch(df, dir, "b0", "bucket", Seq("id"),
+      numPartitions = 8, zOrderRes = 7))
+    val tiles = df.select("bucket").distinct().count()
+    assert(SnapshotTable.lineage(spark, dir).select("bucket").distinct().count() == tiles)
+    // single-tile reads at every file's exact range ends: a range rounded
+    // inwards would skip the file holding that tile
+    val full = SnapshotTable.read(spark, dir)
+    def inRange(frame: DataFrame, lo: Long, hi: Long) =
+      frame.filter(col("bucket").between(lo, hi)).select("id").as[Long].collect().sorted.toSeq
+    val ends = SnapshotTable.currentSnapshot(dir).batches.head.fileStats
+      .flatMap(fs => Seq(fs.minBucket, fs.maxBucket))
+    assert(ends.nonEmpty)
+    def checkEnds(): Unit = ends.foreach { c =>
+      val want = inRange(full, c, c)
+      assert(want.nonEmpty && inRange(SnapshotTable.readRange(spark, dir, c, c)._1, c, c) == want,
+        s"readRange($c, $c)")
+    }
+    checkEnds()
+    // the same manifest with bucket ids as JSON numbers, as written before
+    val v1 = Paths.get(dir, "snapshots", "v1.json")
+    val asNumbers = Set("bucket", "minBucket", "maxBucket")
+    def old(v: JValue): JValue = v match {
+      case JObj(fs) => JObj(fs.map {
+        case (k, JStr(h)) if asNumbers(k) => k -> JNum(java.lang.Long.parseUnsignedLong(h, 16).toDouble)
+        case (k, x) => k -> old(x)
+      })
+      case JArr(xs) => JArr(xs.map(old))
+      case x => x
+    }
+    Files.writeString(v1, old(Json.parse(Files.readString(v1))).render)
+    assert(!Files.readString(v1).contains("\"bucket\":\""), "rewrite left hex bucket ids")
+    assert(SnapshotTable.currentSnapshot(dir).batches.head.buckets.map(_.rows).sum == 20000)
+    checkEnds()
+  }
+
+  test("a write task retried after a failed first attempt is counted once") {
+    // local[4] allows no task retry, so this commits in a local[4,2] JVM
+    val clean = freshDir(); val retried = freshDir()
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filterNot(a => a.startsWith("-Xmx") || a.startsWith("-agentlib"))
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+      RetriedSnapshotCommit.getClass.getName.stripSuffix("$"), clean, retried)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes())
+    assert(proc.waitFor() == 0, out)
+    assert(out.contains("injected failures: 1"), out)
+    val (a, b) = (SnapshotTable.currentSnapshot(clean), SnapshotTable.currentSnapshot(retried))
+    assert(a.batches.map(nameless) == b.batches.map(nameless))
+    assert(SnapshotTable.tableFingerprint(clean) == SnapshotTable.tableFingerprint(retried))
+    val (buckets, files) = readBackLineage(retried, b.batches.head)
+    assert(b.batches.head.buckets == buckets && b.batches.head.fileStats.sortBy(_.file) == files)
+  }
+
+  test("runConcurrently: a failure cancels the sibling bodies' Spark jobs before it rethrows") {
+    val sc = spark.sparkContext
+    val siblingReturned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      graft.EntryQueries.runConcurrently(spark, 2) {
+        case 0 =>
+          // fail once the sibling's job is running
+          while (sc.statusTracker.getActiveJobIds().isEmpty) Thread.sleep(20)
+          throw new IllegalStateException("first body fails")
+        case _ =>
+          // three jobs of a minute each
+          try (0 until 3).foreach { _ =>
+            spark.range(0, 4, 1, 4).as[Long].map { x => Thread.sleep(60000); x }.count()
+          }
+          finally siblingReturned.set(true)
+      }
+    }
+    assert(e.getMessage == "first body fails")
+    assert(siblingReturned.get, "the sibling body outlived the call")
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "a sibling job outlived the call")
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the sibling ran on after the failure")
+  }
 }
+
+object SnapshotTableSpec {
+  /** `n` seeded points as (id, res-`res` cell id in `bucket`). */
+  def cellDf(spark: SparkSession, n: Int, res: Int): DataFrame =
+    spark.range(0, n, 1, 8)
+      .select(col("id"),
+        (pmod(st.mix64(col("id")), lit(360000L)).cast("double") / 1000.0 - 180.0).as("lon"),
+        (pmod(st.mix64(col("id") + 1), lit(170000L)).cast("double") / 1000.0 - 85.0).as("lat"))
+      .select(col("id"), st.cellId(col("lon"), col("lat"), res).as("bucket"))
+}
+
+/** Commits one z-order batch into two tables under `local[4,2]`: cleanly
+  * into the first, and into the second with the first attempt of write
+  * task 1 failing at task commit — after its writer has closed its file.
+  * Prints the number of injected failures. */
+object RetriedSnapshotCommit {
+  def main(args: Array[String]): Unit = {
+    val Array(clean, retried) = args
+    val spark = SparkSession.builder().master("local[4,2]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val df = SnapshotTableSpec.cellDf(spark, 20000, res = 5)
+    def commit(table: String) = require(SnapshotTable.commitBatch(df, table, "b0", "bucket",
+      Seq("id"), numPartitions = 8, zOrderRes = 5))
+    commit(clean)
+    spark.conf.set("spark.sql.sources.commitProtocolClass", classOf[FailFirstWriteAttempt].getName)
+    commit(retried)
+    println(s"injected failures: ${FailFirstWriteAttempt.injected.get}")
+    spark.stop()
+  }
+}
+
+/** The default commit protocol, except that the first attempt of write
+  * task 1 throws at task commit. */
+class FailFirstWriteAttempt(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage = {
+    val tc = TaskContext.get()
+    if (tc.partitionId() == 1 && tc.attemptNumber() == 0) {
+      FailFirstWriteAttempt.injected.incrementAndGet()
+      throw new java.io.IOException("injected failure of a first write attempt")
+    }
+    super.commitTask(ctx)
+  }
+}
+object FailFirstWriteAttempt { val injected = new java.util.concurrent.atomic.AtomicInteger }

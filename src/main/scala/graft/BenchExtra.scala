@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
   * (Bench.scala is frozen; this main exists so per-query effects can be
   * separated from the host's sub-minute capacity flapping, BENCH/BASELINE.md
   * §0). Runs each selected query `SPARK_GRAFT_REPEATS` times (default 3) in
-  * one session and reports per-query min + all samples; the min of several
+  * one SparkSession and reports per-query min + samples (and errors, as Bench
+  * does; a failed repeat is kept out of both); the min of several
   * back-to-back samples is robust against one-sided external-occupancy
   * noise. Same contract as Bench otherwise: data dir from
   * `SPARK_GRAFT_SF_DIR`, cores from `SPARK_GRAFT_CPUS`,
@@ -35,20 +36,31 @@ object BenchExtra {
     catch { case _: Throwable => () }
     finally graft.operators.CacheTracker.releaseAll()
     val results = ordered.map { case (name, fn) =>
-      val ts = (0 until repeats).map { _ =>
+      val runs = (0 until repeats).map { _ =>
         val t0 = System.nanoTime()
         spark.sparkContext.setJobDescription(name)
-        try fn(spark, sfDir).count()
-        catch { case t: Throwable => println(s"ERROR $name: ${t.getMessage}") }
-        finally graft.operators.CacheTracker.releaseAll()
-        (System.nanoTime() - t0) / 1e9
+        val err =
+          try { fn(spark, sfDir).count(); None }
+          catch { case t: Throwable =>
+            Some((Option(t.getMessage).getOrElse(t.getClass.getName))
+              .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)) }
+          finally graft.operators.CacheTracker.releaseAll()
+        ((System.nanoTime() - t0) / 1e9, err)
       }
-      (name, ts)
+      (name, runs)
     }
-    val qs = results.map { case (k, ts) =>
-      s"\"$k\":{\"min\":${ts.min},\"samples\":[${ts.mkString(",")}]}"
+    // a failed repeat is no sample of the query: `min` and `samples` cover
+    // the successful repeats only (`min` is null when none succeeded), and
+    // the query's first error message goes to `errors`, as in Bench
+    val qs = results.map { case (k, runs) =>
+      val ts = runs.collect { case (t, None) => t }
+      val min = if (ts.isEmpty) "null" else ts.min.toString
+      s"\"$k\":{\"min\":$min,\"samples\":[${ts.mkString(",")}],\"failed\":${runs.size - ts.size}}"
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"benchx","repeats":$repeats,"queries":$qs,"sf":"$sfDir"}""")
+    val errs = results.flatMap { case (k, runs) =>
+      runs.collectFirst { case (_, Some(e)) => s"\"$k\":\"$e\"" }
+    }.mkString("{", ",", "}")
+    println(s"""{"metric":"benchx","repeats":$repeats,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -123,7 +123,6 @@ object EntryQueries {
   /** Cell-grid aggregation: the engine's Morton cell id (st_cellid →
     * st_cellx/y) must reproduce plain floor arithmetic in DuckDB. */
   def q04CellGrid(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val c = t(s, dir, "customer")
       .withColumn("lon", dLon(col("c_custkey"), 7919L))
       .withColumn("lat", dLat(col("c_custkey"), 104729L))
@@ -142,7 +141,6 @@ object EntryQueries {
     * BETWEEN join in DuckDB — rectangles make the exact predicate
     * SQL-replayable while the Spark side exercises the real machinery. */
   def q05PipJoin(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val (lonMin, latMin, lonMax, latMax) = rectBounds(col("r_regionkey"))
     val polys = t(s, dir, "region").select(
       col("r_regionkey"),
@@ -173,7 +171,6 @@ object EntryQueries {
     * points have no hot cells). Join rows must match the plain BETWEEN
     * oracle exactly. */
   def q06PipSalted(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val (lonMin, latMin, lonMax, latMax) = rectBounds(col("r_regionkey"))
     val rects = t(s, dir, "region").select(col("r_regionkey"),
       lonMin.as("lon_min"), latMin.as("lat_min"), lonMax.as("lon_max"), latMax.as("lat_max"))
@@ -205,7 +202,6 @@ object EntryQueries {
   /** kNN via distributed ring expansion; oracle is brute-force SQL. Exact
     * squared planar distance → identical ordering in both engines. */
   def q07Knn(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val queries = t(s, dir, "supplier")
       .select(col("s_suppkey").as("qk"))
       .withColumn("qlon", dLon(col("qk"), 4409L))
@@ -316,7 +312,6 @@ object EntryQueries {
     * equal the direct arithmetic (the DuckDB oracle). Exercises the whole
     * conversion layer inside a distributed scan. */
   def q13CodecKml(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     import graft.functions.{codecs => cc}
     val pts = t(s, dir, "customer")
       .withColumn("lon", dLon(col("c_custkey"), 7919L))
@@ -338,7 +333,6 @@ object EntryQueries {
 
   /** Same idea through the WKT codec + WKB accessors. */
   def q14CodecWkt(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val pts = t(s, dir, "supplier")
       .withColumn("lon", dLon(col("s_suppkey"), 4409L))
       .withColumn("lat", dLat(col("s_suppkey"), 9973L))
@@ -404,7 +398,6 @@ object EntryQueries {
     * oracle replays the same fdlibm (StrictMath == DuckDB libm?) formula...
     * trig differs across engines in the last ulp, so the oracle rounds. */
   def q18Haversine(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val sup = t(s, dir, "supplier")
       .withColumn("lon", dLon(col("s_suppkey"), 4409L))
       .withColumn("lat", dLat(col("s_suppkey"), 9973L))
@@ -424,7 +417,6 @@ object EntryQueries {
     * st_cellparent — the oracle recomputes the coarse grid directly with
     * floor arithmetic, pinning the Morton hierarchy. */
   def q19TilePyramid(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val c = t(s, dir, "customer")
       .withColumn("lon", dLon(col("c_custkey"), 7919L))
       .withColumn("lat", dLat(col("c_custkey"), 104729L))
@@ -454,7 +446,6 @@ object EntryQueries {
     * Counts are exact (COUNT + COUNT DISTINCT — both scale as ordinary
     * two-phase hash aggregates) so the DuckDB oracle can hash-match. */
   def q20ImagePipeline(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val n = imageCount(dir)
     // columnar metadata synthesis == a parquet scan with bytes/caption
     // pruned; stays in whole-stage codegen (no per-row Encoder objects)
@@ -568,7 +559,6 @@ object EntryQueries {
     * oracle derives the expected (fmt, n, n_dims_ok=n) distribution from the
     * synthesis formula, so any decode regression breaks the hash match. */
   def q26ImageInvariants(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     import s.implicits._
     val n = Math.min(imageCount(dir), 2000L)
     // one batched decode per row (the img_width/img_height UDF pair decoded
@@ -600,7 +590,6 @@ object EntryQueries {
     * snapshot commits with per-bucket lineage; re-running skips committed
     * batches (exact resume). Output: the committed lineage metrics. */
   def q27SnapshotPipeline(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val table = tempSnapshotDir("graft_flagship")
     val polys = districtPolygons(s)
     val n = Math.min(imageCount(dir), 20000L)
@@ -705,7 +694,6 @@ object EntryQueries {
   }
 
   def q28ReadRange(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val table = readRangeTable(s, dir)
     // the res-3 cell (x=3, y=6) — contains the London hotspot — covers one
     // contiguous morton range of res-7 descendants
@@ -730,7 +718,6 @@ object EntryQueries {
     * manifest still skips files — the maintenance path through the
     * correctness gate, not just ScalaTest. */
   def q44CompactedRange(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val table = readRangeTable(s, dir)
     require(sources.SnapshotTable.compact(s, table, "tile", Seq("image_id"),
       numPartitions = 8, zOrderRes = 7), "compact found nothing to merge")
@@ -753,7 +740,6 @@ object EntryQueries {
     * decoded bytes — ScalaTest-pinned, not SQL-replayable); the synthetic
     * hash stands in here so the pairing engine is oracle-checked. */
   def q29ImageNearDup(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val n = Math.min(imageCount(dir), 20000L)
     val d = col("id") % 4
     val baseId = col("id") - d
@@ -984,7 +970,6 @@ object EntryQueries {
     * skewed corpus; cell-disk prefilter + exact integer residual, oracle =
     * brute-force quantized pair scan. */
   def q43RadiusPairs(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val n = Math.min(imageCount(dir), 20000L)
     val pts = ImageTable.metaDf(s, 0, n)
       .withColumn("lon", SpatialOps.phashLon(col("phash")))
@@ -1004,7 +989,6 @@ object EntryQueries {
     * subset keeps the DuckDB closure at q39 scale (the full 20k-point
     * closure measured 226 s — too slow for a per-round gate). */
   def q46SpatialClusters(s: SparkSession, dir: String): DataFrame = {
-    ensureRegistered(s)
     val n = Math.min(imageCount(dir), 20000L)
     val pts = ImageTable.metaDf(s, 0, n)
       .filter(pmod(col("id"), lit(10L)) < 3 && pmod(col("id"), lit(3L)) === 0)

@@ -24,8 +24,9 @@ import org.apache.spark.sql.expressions.Window
   *    distinguish "no near-dups" from "all buckets dropped" should lower
   *    `maxBucket` expectations or count oversized buckets directly
   *    (`groupBy(band, hash).count.filter(_ > maxBucket)`) on their corpus;
-  *  - IN-cap buckets never concentrate work either: [[simhashPairs]] and
-  *    the embedding near-dup generate pairs through [[chunkPairRows]], so
+  *  - IN-cap buckets never concentrate work either: the three LSH pair
+  *    generators (MinHash, Hamming blocks, embedding bands) share one core,
+  *    [[bucketPairs]], which generates pairs through [[chunkPairRows]], so
   *    per-row and per-task pair volume is bounded by `chunkSize²`
   *    regardless of bucket size (a 64k-member in-cap bucket becomes
   *    C(128,2)+128 ≈ 8k distributable chunk-pair rows, not one 2·10⁹-pair
@@ -67,12 +68,18 @@ object Dedup {
     * entirely: its window + self-join + redistribution exchanges cost
     * ~0.7 s of serialized empty-stage rounds per invocation even when no
     * bucket qualifies (probed at sf0.1) — the operator-level analog of
-    * AQE's runtime plan adaptation. */
+    * AQE's runtime plan adaptation. A bucket above `chunkSize` reaching the
+    * small-only path means that proof was wrong: the query fails instead of
+    * silently dropping the bucket's pairs. The check is a filter predicate
+    * because Catalyst prunes a check column that nothing reads. */
   private[operators] def chunkPairRows(
       kept: DataFrame, keyCols: Seq[String], chunkSize: Int,
       smallOnly: Boolean = false): DataFrame = {
     val keyC = keyCols.map(col)
-    val small = kept.filter(col("__bn") <= chunkSize)
+    val fits = col("__bn") <= chunkSize
+    val small = kept
+      .filter(if (!smallOnly) fits else when(fits, true).otherwise(raise_error(lit(
+        s"chunkPairRows(smallOnly = true): a bucket has more than chunkSize = $chunkSize members"))))
       .groupBy(keyC: _*)
       .agg(sort_array(collect_list(col("x"))).as("__xa"))
       .select(keyC ++ Seq(lit(0).as("__cka"), lit(0).as("__ckb"), col("__xa"),
@@ -116,7 +123,7 @@ object Dedup {
     * inter-chunk: full cross product — chunks partition the bucket). */
   private def chunkedBucketPairs(
       kept: DataFrame, keyCols: Seq[String], chunkSize: Int,
-      smallOnly: Boolean = false, carry: Seq[String] = Nil): DataFrame =
+      smallOnly: Boolean, carry: Seq[String]): DataFrame =
     chunkPairRows(kept, keyCols, chunkSize, smallOnly)
       .select(carry.map(col) :+ explode(when(col("__cka") === col("__ckb"),
           expr(
@@ -125,6 +132,45 @@ object Dedup {
         .otherwise(
           expr("flatten(transform(__xa, x -> transform(__xb, y -> struct(x AS a, y AS b))))"))).as("p"): _*)
       .select(carry.map(col) ++ Seq(col("p.a").as("a"), col("p.b").as("b")): _*)
+
+  /** [[bucketPairs]]' result: the in-bucket pairs (`band` plus the two
+    * members' payload structs `a`, `b`), the number of over-cap buckets
+    * dropped, and the persisted signature frame for verification joins. */
+  private final case class BucketPairs(pairs: DataFrame, nDropped: Long, sigs: DataFrame)
+
+  /** THE capped-bucket pair generator behind [[minhashCandidates]],
+    * [[hammingPairs64]] and the embedding near-dup. `bandKeys` is an array
+    * column over `sigFrame`; element i is the row's bucket key in band i.
+    * Every unordered pair sharing an in-cap (band, key) bucket comes out
+    * once per such band, carrying the `payload` columns of both members.
+    *
+    * `maxBucket` bounds the per-(band, key) bucket size: the count is
+    * aggregated first and oversized buckets are filtered before any
+    * `collect_list` runs, so a degenerate hot bucket (e.g. millions of
+    * identical boilerplate docs) costs one counted row, not an OOM. */
+  private def bucketPairs(
+      sigFrame: DataFrame, bandKeys: Column, payload: Seq[String],
+      maxBucket: Int, chunkSize: Int): BucketPairs = {
+    // the signature frame feeds the banding plus the callers' verification
+    // joins — persist it so the signature kernel runs once per row
+    val sigs = sigFrame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    CacheTracker.register(sigs)
+    val banded = sigs.select(payload.map(col) :+ posexplode(bandKeys).as(Seq("band", "bh")): _*)
+    // count first: the (band,bh) histogram decides which buckets survive the
+    // cap; both aggregations shuffle on the same key, so AQE reuses the
+    // exchange and the oversized buckets never reach collect_list.
+    val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
+    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
+    // bucket-and-pair instead of a self-join: one shuffle on (band, bh),
+    // members collected per bucket (sorted for determinism), pairs exploded
+    // in-bucket — through the bounded chunk generator, so even an at-cap
+    // bucket never materializes more than chunkSize² pairs per row/task.
+    val kept = banded
+      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
+      .select(col("band"), col("bh"), col("__bn"), struct(payload.map(col): _*).as("x"))
+    BucketPairs(chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize,
+      smallOnly = maxInCap <= chunkSize, carry = Seq("band")), nDropped, sigs)
+  }
 
   /** Exact dedup on a content column: keeps the first row (min of `keep`)
     * per distinct content hash. Map-side partial aggregation; one shuffle. */
@@ -177,11 +223,8 @@ object Dedup {
     * sig_frac, n_dropped_buckets) with id_a < id_b. One shuffle on band
     * hash; no all-pairs compare.
     *
-    * `maxBucket` bounds the per-(band,hash) bucket size: the count is
-    * aggregated first and oversized buckets are filtered before any
-    * `collect_list` runs, so a degenerate hot bucket (e.g. millions of
-    * identical boilerplate docs) costs one counted row, not an OOM. The
-    * number of dropped buckets is joined onto every output row as
+    * `maxBucket` bounds the per-(band,hash) bucket size ([[bucketPairs]]).
+    * The number of dropped buckets is joined onto every output row as
     * `n_dropped_buckets` (no silent caps).
     */
   def minhashCandidates(
@@ -189,48 +232,31 @@ object Dedup {
       shingleLen: Int = 4, bands: Int = 8, rowsPerBand: Int = 4,
       minBands: Int = 2, minSigFrac: Double = 0.35,
       maxBucket: Int = 4096, chunkSize: Int = DefaultChunkSize): DataFrame = {
-    // the signature frame feeds the banding plus the two estimate joins —
-    // cache it or the per-doc MinHash kernel runs 3x. (A/B rejected the
-    // carry-sig-in-the-bucket-struct alternative: the 32-long payload rides
-    // the (band,bh) shuffle bands× per doc — ~3× the shuffled bytes of the
-    // skinny banding + two sig joins, and measurably slower at sf0.1.)
-    val sig = df.select(id.as("id"), minhash(text, shingleLen, bands * rowsPerBand).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheTracker.register(sig)
-    val banded = sig.select(col("id"),
-      posexplode(bandHashArray(col("sig"), bands, rowsPerBand)).as(Seq("band", "bh")))
-    // count first: the (band,bh) histogram decides which buckets survive the
-    // cap; both aggregations shuffle on the same key, so AQE reuses the
-    // exchange and the oversized buckets never reach collect_list.
-    val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
-    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
-    // bucket-and-pair instead of a self-join: one shuffle on (band, bh),
-    // ids collected per bucket (sorted for determinism), pairs exploded
-    // in-bucket — through the bounded chunk generator, so even an at-cap
-    // bucket never materializes more than chunkSize² pairs per row/task.
-    val kept = banded
-      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
-      .select(col("band"), col("bh"), col("__bn"), struct(col("id")).as("x"))
-    val pairs = chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize,
-        smallOnly = maxInCap <= chunkSize)
+    // only the id rides the buckets; the persisted signature frame feeds the
+    // two estimate joins. (A/B rejected the carry-sig-in-the-bucket-struct
+    // alternative: the 32-long payload rides the (band,bh) shuffle bands×
+    // per doc — ~3× the shuffled bytes of the skinny banding + two sig
+    // joins, and measurably slower at sf0.1.)
+    val perms = bands * rowsPerBand
+    val bp = bucketPairs(df.select(id.as("id"), minhash(text, shingleLen, perms).as("sig")),
+      bandHashArray(col("sig"), bands, rowsPerBand), Seq("id"), maxBucket, chunkSize)
+    bp.pairs
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_bands_matched"))
       // pass 1: require >= minBands matching bands (cuts the false-positive
       // tail an order of magnitude on overlapping corpora)
       .filter(col("n_bands_matched") >= minBands)
-    // pass 2: cheap jaccard estimate from full signatures (32 comparisons)
-    // before the expensive exact shingle-set verification
-    val perms = bands * rowsPerBand
-    pairs
-      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+      // pass 2: cheap jaccard estimate from full signatures (32 comparisons)
+      // before the expensive exact shingle-set verification
+      .join(bp.sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
+      .join(bp.sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("sig_frac",
         size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), v => v))
           .cast("double") / perms.toDouble)
       .filter(col("sig_frac") >= minSigFrac)
       .select("id_a", "id_b", "n_bands_matched", "sig_frac")
-      .withColumn("n_dropped_buckets", lit(nDropped))
+      .withColumn("n_dropped_buckets", lit(bp.nDropped))
   }
 
   /** Exact n-gram Jaccard for candidate pairs (verification pass after LSH):
@@ -497,10 +523,7 @@ object Dedup {
     // near-empty blocks pays that many task launches per pass per scan. The
     // count is one cheap action on the already-persisted projection; at
     // scale (≥ ~500k edges/partition) this keeps the session's parallelism.
-    val tE = System.nanoTime()
     val nEdges = e.count()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] edges count ${(System.nanoTime() - tE) / 1e9}%.2f s n=$nEdges")
     val parts = math.max(1L, math.min(
       pairs.sparkSession.sparkContext.defaultParallelism.toLong,
       nEdges / 500000L + 1L)).toInt
@@ -533,14 +556,10 @@ object Dedup {
     // in-loop the sum comparison is exact: comp values are element-wise
     // non-increasing, so equal sums ⟺ no label changed. Only the empty
     // graph needs a separate check (its sum is vacuously stable).
-    val tI = System.nanoTime()
     var prevSum = labelSum(labels)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] init labels ${(System.nanoTime() - tI) / 1e9}%.2f s")
     var iter = 0
     var converged = nEdges == 0L
     while (!converged && iter < maxIters) {
-      val tP = System.nanoTime()
       val msgs = bidir.as("e").join(labels.as("l"), col("e.src") === col("l.id"))
         .select(col("e.dst").as("id"), col("l.comp"))
       val stepped = labels.unionByName(msgs)
@@ -571,11 +590,7 @@ object Dedup {
           least(col("comp"), coalesce(col("__pcomp"), col("comp"))).as("comp"))
         .localCheckpoint(false)
       stepped.unpersist()
-      val t0 = System.nanoTime()
       val s = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] pass ${iter + 1} total ${(System.nanoTime() - tP) / 1e9}%.2f " +
-          f"(sum-action ${(System.nanoTime() - t0) / 1e9}%.2f) s sum=$s")
       labels.unpersist()
       labels = next
       converged = s.compareTo(prevSum) == 0
@@ -723,84 +738,82 @@ object Dedup {
       chunkSize: Int = DefaultChunkSize): DataFrame =
     hammingPairs64(df, id, simhash(text), maxHamming, maxBucket, chunkSize)
 
+  /** (offset, width) of each of `blocks` contiguous blocks over the low
+    * `bits` bits of a signature — widths as equal as possible, the first
+    * (bits % blocks) blocks get the extra bit. THE single block layout of
+    * the bit-block engines: the pigeonhole blocks (64 bits, maxHamming + 1
+    * blocks) of [[hammingPairs64]] and of the streaming engine
+    * (StreamingDedup), which must bucket identically or their pair sets
+    * diverge, and the equal-width bands of the embedding near-dup (planes
+    * bits, bands blocks). */
+  private[graft] def pigeonholeLayout(bits: Int, blocks: Int): Array[(Int, Int)] = {
+    require(bits <= 64 && blocks >= 1 && blocks <= bits,
+      s"pigeonholeLayout: need 1 <= blocks ($blocks) <= bits ($bits) <= 64")
+    val widths = Array.tabulate(blocks)(b => bits / blocks + (if (b < bits % blocks) 1 else 0))
+    val offsets = widths.scanLeft(0)(_ + _)
+    Array.tabulate(blocks)(b => (offsets(b), widths(b)))
+  }
+
+  /** The value of block `(offset, width)` of a 64-bit signature column. */
+  private[graft] def blockKey(sig: Column, block: (Int, Int)): Column = {
+    val (off, w) = block
+    shiftrightunsigned(sig, off).bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L))
+  }
+
+  /** Index of the first block on which two signatures agree, or -1. */
+  private def firstAgreeingBlock(a: Column, b: Column, layout: Array[(Int, Int)]): Column =
+    layout.indices.foldRight(lit(-1): Column) { (i, els) =>
+      when(blockKey(a, layout(i)) === blockKey(b, layout(i)), lit(i)).otherwise(els)
+    }
+
+  /** [[bucketPairs]] over the blocks of the `sig` column of `sigFrame`
+    * (which must carry `id` and `sig`), each unordered pair exactly once,
+    * projected through `cols` — which read the (id, sig) structs `a`, `b`
+    * and must produce `id_a` and `id_b`.
+    *
+    * Cross-block dedup: a pair can agree on (and surface from) several
+    * blocks. When NO bucket was dropped (known before planning, from
+    * bucketStats; the overwhelmingly common shape), every agreeing block's
+    * bucket is present, so each pair is kept ONLY where its bucket's block
+    * == the pair's FIRST agreeing block — a pure per-row predicate on the
+    * two signatures (the StreamingDedup rule), replacing a full shuffle of
+    * all candidate pairs with a map-side filter. With drops, a pair's first
+    * agreeing block may be the dropped one while a later block survived —
+    * only the groupBy dedup preserves those pairs, so the drop path keeps
+    * it. */
+  private def bitBlockPairs(
+      sigFrame: DataFrame, layout: Array[(Int, Int)], maxBucket: Int, chunkSize: Int,
+      cols: Column*): BucketPairs = {
+    val bp = bucketPairs(sigFrame, array(layout.map(blockKey(col("sig"), _)): _*),
+      Seq("id", "sig"), maxBucket, chunkSize)
+    bp.copy(pairs =
+      if (bp.nDropped == 0)
+        bp.pairs.filter(col("band") === firstAgreeingBlock(col("a.sig"), col("b.sig"), layout))
+          .select(cols: _*)
+      else bp.pairs.select(cols: _*).dropDuplicates("id_a", "id_b"))
+  }
+
   /** Near-dup pairs at Hamming distance ≤ `maxHamming` over ANY precomputed
     * 64-bit signature column (SimHash, image perceptual hash, …) — the
     * pigeonhole-block engine behind [[simhashPairs]], exposed so other
     * modalities reuse the same bounded-bucket machinery. Returns
     * (id_a, id_b, hamming, n_dropped_buckets), id_a < id_b.
     */
-  /** (offset, width) of each pigeonhole block for `maxHamming + 1` blocks —
-    * widths as equal as possible, first (64 % blocks) blocks get the extra
-    * bit. THE single definition of the block layout: the batch engine below
-    * and the streaming engine (StreamingDedup) must bucket identically or
-    * their pair sets diverge. */
-  private[graft] def pigeonholeLayout(maxHamming: Int): Array[(Int, Int)] = {
-    require(maxHamming >= 0 && maxHamming < 64, "maxHamming in [0, 63]")
-    val blocks = maxHamming + 1
-    val widths = Array.tabulate(blocks)(b => 64 / blocks + (if (b < 64 % blocks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    Array.tabulate(blocks)(b => (offsets(b), widths(b)))
-  }
-
   def hammingPairs64(
       df: DataFrame, id: Column, sig64: Column,
       maxHamming: Int = 3, maxBucket: Int = 65536,
       chunkSize: Int = DefaultChunkSize): DataFrame = {
-    val layout = pigeonholeLayout(maxHamming)
-    val blocks = layout.length
-    // the banded frame feeds the count histogram plus both chunk branches —
-    // persist the signatures so the signature kernel runs once per doc
-    val sigs = df.select(id.as("id"), sig64.as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheTracker.register(sigs)
-    val banded = sigs.select(col("id"), col("sig"), posexplode(
-      array((0 until blocks).map { b =>
-        val (off, w) = layout(b)
-        val mask = if (w == 64) -1L else (1L << w) - 1L
-        shiftrightunsigned(col("sig"), off).bitwiseAND(lit(mask))
-      }: _*)).as(Seq("band", "bh")))
-    val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
-    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
-    val kept = banded
-      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bh"))
-      .select(col("band"), col("bh"), col("__bn"), struct(col("id"), col("sig")).as("x"))
-    val smallOnly = maxInCap <= chunkSize
-    val ham = hamming(col("a.sig"), col("b.sig")).cast("long")
-    // cross-block dedup: a pair within the Hamming bound can agree on (and
-    // surface from) several blocks. When NO bucket was dropped (known
-    // driver-side from bucketStats; the overwhelmingly common shape), every
-    // agreeing block's bucket is present, so each pair is kept ONLY where
-    // its bucket's block == the pair's FIRST agreeing block — a pure
-    // per-row predicate on the two signatures (the StreamingDedup rule),
-    // replacing a full shuffle of all candidate pairs with a map-side
-    // filter. With drops, a pair's first agreeing block may be the dropped
-    // one while a later block survived — only the groupBy dedup preserves
-    // those pairs, so the drop path keeps it.
-    val deduped =
-      if (nDropped == 0) {
-        val firstBlk = layout.zipWithIndex.foldRight(lit(-1): Column) {
-          case (((off, w), i), els) =>
-            val mask = if (w == 64) -1L else (1L << w) - 1L
-            when(shiftrightunsigned(col("a.sig"), off).bitwiseAND(lit(mask)) ===
-                 shiftrightunsigned(col("b.sig"), off).bitwiseAND(lit(mask)), lit(i))
-              .otherwise(els)
-        }
-        chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize, smallOnly,
-            carry = Seq("band"))
-          .filter(col("band") === firstBlk)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"), ham.as("__h"))
-      } else
-        chunkedBucketPairs(kept, Seq("band", "bh"), chunkSize, smallOnly)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"), ham.as("__h"))
-          .groupBy("id_a", "id_b")
-          .agg(first(col("__h")).as("__h"))
-    deduped
+    val bp = bitBlockPairs(df.select(id.as("id"), sig64.as("sig")),
+      pigeonholeLayout(64, maxHamming + 1), maxBucket, chunkSize,
+      col("a.id").as("id_a"), col("b.id").as("id_b"),
+      hamming(col("a.sig"), col("b.sig")).cast("long").as("__h"))
+    bp.pairs
       .filter(col("__h") <= maxHamming)
-      // when() keeps the column nullable like the first() aggregate it
-      // replaces — the gate compares schemas, not just values
+      // when() keeps the published `hamming` column nullable on both dedup
+      // paths — the gate compares schemas, not just values
       .select(col("id_a"), col("id_b"),
         when(col("__h") >= 0, col("__h")).as("hamming"))
-      .withColumn("n_dropped_buckets", lit(nDropped))
+      .withColumn("n_dropped_buckets", lit(bp.nDropped))
   }
 
   /** Embedding cosine near-duplicates via BANDED deterministic
@@ -852,57 +865,22 @@ object Dedup {
       verify: DataFrame => DataFrame,
       chunkSize: Int = DefaultChunkSize): DataFrame = {
     require(planes % bands == 0 && planes <= 64, "planes must be ≤64 and divisible by bands")
-    val width = planes / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1L
-    val sigExpr = Ann.hyperplaneSig(emb, planes)
-    // the embedding frame feeds banding plus the two verification joins —
-    // persist it so the hyperplane signatures run once
-    val sigs = df.select(id.as("id"), emb.as("emb"), sigExpr.as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    CacheTracker.register(sigs)
-    val banded = sigs.select(col("id"), col("sig"), posexplode(
-      array((0 until bands).map(b =>
-        shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit(mask))): _*))
-      .as(Seq("band", "bv")))
-    val counts = banded.groupBy("band", "bv").agg(count(lit(1)).as("__bn"))
-    val (nDropped, maxInCap) = bucketStats(counts, maxBucket)
     // pairs are generated id+sig-only through bounded chunk rows (the
     // EMBEDDINGS would multiply the chunk payload by the vector width;
-    // joining them back onto the deduplicated pair set is the
-    // skinny-shuffle shape — the 64-bit sig rides along because the
-    // first-agreeing-band dedup below reads it, 8 bytes/row, nothing like
-    // the r4-rejected 32-long MinHash payload), so an in-cap hot bucket
-    // costs chunkSize²-pair tasks, never one mega-row
-    val kept = banded
-      .join(counts.filter(col("__bn") <= maxBucket && col("__bn") > 1), Seq("band", "bv"))
-      .select(col("band"), col("bv"), col("__bn"), struct(col("id"), col("sig")).as("x"))
-    val smallOnly = maxInCap <= chunkSize
-    // cross-band dedup, as in hammingPairs64: with no dropped buckets each
-    // pair is kept only in its FIRST agreeing band (map-side predicate on
-    // the two sigs); with drops the groupBy dedup preserves pairs whose
-    // first agreeing band was the dropped one
-    val deduped =
-      if (nDropped == 0) {
-        val firstBand = (0 until bands).foldRight(lit(-1): Column) { (b, els) =>
-          when(shiftrightunsigned(col("a.sig"), b * width).bitwiseAND(lit(mask)) ===
-               shiftrightunsigned(col("b.sig"), b * width).bitwiseAND(lit(mask)), lit(b))
-            .otherwise(els)
-        }
-        chunkedBucketPairs(kept, Seq("band", "bv"), chunkSize, smallOnly,
-            carry = Seq("band"))
-          .filter(col("band") === firstBand)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      } else
-        chunkedBucketPairs(kept, Seq("band", "bv"), chunkSize, smallOnly)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(count(lit(1)).as("__nb"))
-          .drop("__nb")
-    val cand = deduped
-      .join(sigs.select(col("id").as("id_a"), col("emb").as("emb_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("emb").as("emb_b")), "id_b")
+    // joining them back onto the deduplicated pair set from the persisted
+    // frame is the skinny-shuffle shape — the 64-bit sig rides along
+    // because the first-agreeing-band dedup reads it, 8 bytes/row, nothing
+    // like the r4-rejected 32-long MinHash payload), so an in-cap hot
+    // bucket costs chunkSize²-pair tasks, never one mega-row
+    val bp = bitBlockPairs(
+      df.select(id.as("id"), emb.as("emb"), Ann.hyperplaneSig(emb, planes).as("sig")),
+      pigeonholeLayout(planes, bands), maxBucket, chunkSize,
+      col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val cand = bp.pairs
+      .join(bp.sigs.select(col("id").as("id_a"), col("emb").as("emb_a")), "id_a")
+      .join(bp.sigs.select(col("id").as("id_b"), col("emb").as("emb_b")), "id_b")
     verify(cand.withColumn(scoreName, score(col("emb_a"), col("emb_b"))))
       .select(col("id_a"), col("id_b"), col(scoreName))
-      .withColumn("n_dropped_buckets", lit(nDropped))
+      .withColumn("n_dropped_buckets", lit(bp.nDropped))
   }
 }

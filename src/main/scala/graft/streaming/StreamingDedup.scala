@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Dedup
+
 /** Streaming near-duplicate detection: the continuous-ingest analog of
   * [[graft.operators.Dedup.hammingPairs64]]. Every row's 64-bit signature is
   * split into the same pigeonhole blocks (maxHamming+1 contiguous blocks, so
@@ -64,9 +66,9 @@ object StreamingDedup {
       watermark: String, maxHamming: Int = 3,
       maxPerBucket: Int = 1024,
       droppedEntries: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    // the ONE block-layout definition, shared with the batch engine —
-    // bucketing must match or the streaming pair set diverges from batch
-    val layout = graft.operators.Dedup.pigeonholeLayout(maxHamming)
+    // the ONE block layout and block-key extraction, shared with the batch
+    // engine — bucketing must match or the streaming pair set diverges
+    val layout = Dedup.pigeonholeLayout(64, maxHamming + 1)
     // the pairing WINDOW is enforced on event-time distance at compare time:
     // Spark's watermark lags one micro-batch (it advances after a batch
     // completes), so state eviction alone would let a partner just past the
@@ -88,10 +90,7 @@ object StreamingDedup {
       .select(id.cast("long").as("id"), sig64.cast("long").as("sig"),
         eventTime.cast("timestamp").as("ts"))
       .select(col("id"), col("sig"), col("ts"), posexplode(
-        array(layout.map { case (off, w) =>
-          shiftrightunsigned(col("sig"), off)
-            .bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L))
-        }: _*)).as(Seq("band", "bv")))
+        array(layout.map(Dedup.blockKey(col("sig"), _)): _*)).as(Seq("band", "bv")))
       .withWatermark("ts", watermark)
       .as[SigEvent]
 

@@ -76,38 +76,11 @@ object OptProbe {
       CacheTracker.releaseAll()
     }
 
-    // ---- hammingPairs64 large-branch cost (empty at this scale) ----
+    // ---- q22 ----
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     (1 to 2).foreach { i =>
       time(s"q22 simhashPairs real #$i") {
         Dedup.simhashPairs(docs, col("doc_id"), col("text"), maxHamming = 3).count()
-      }
-      CacheTracker.releaseAll()
-      // small-only variant: same plan minus the >chunkSize branch
-      time(s"q22 simhashPairs small-only #$i") {
-        import org.apache.spark.sql.functions.{posexplode, shiftrightunsigned}
-        val sigs = docs.select(col("doc_id").as("id"),
-          graft.functions.st.simhash64(col("text")).as("sig")).persist()
-        val layout = Array((0, 16), (16, 16), (32, 16), (48, 16))
-        val banded = sigs.select(col("id"), col("sig"), posexplode(
-          array(layout.map { case (off, w) =>
-            shiftrightunsigned(col("sig"), off).bitwiseAND(lit((1L << w) - 1L))
-          }: _*)).as(Seq("band", "bh")))
-        val counts = banded.groupBy("band", "bh").agg(count(lit(1)).as("__bn"))
-        val kept = banded
-          .join(counts.filter(col("__bn") <= 65536 && col("__bn") > 1), Seq("band", "bh"))
-          .select(col("band"), col("bh"), col("__bn"), struct(col("id"), col("sig")).as("x"))
-        val small = kept.groupBy("band", "bh")
-          .agg(sort_array(collect_list(col("x"))).as("__xa"))
-          .select(explode(expr(
-            """flatten(transform(__xa, (x, i) ->
-              |  transform(slice(__xa, i + 2, size(__xa) - i - 1), y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"))
-          .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-            bit_count(col("p.a.sig").bitwiseXOR(col("p.b.sig"))).cast("long").as("hamming"))
-          .groupBy("id_a", "id_b").agg(first(col("hamming")).as("hamming"))
-          .filter(col("hamming") <= 3)
-        println("pairs=" + small.count())
-        sigs.unpersist()
       }
       CacheTracker.releaseAll()
     }

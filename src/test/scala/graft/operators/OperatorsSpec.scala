@@ -434,6 +434,24 @@ class DedupAnnSpec extends AnyFunSuite {
       s"chunk sizes ${rows.getInt(1)}/${rows.getInt(2)} exceed the bound")
   }
 
+  test("chunkPairRows smallOnly: a bucket above chunkSize fails loudly, not silently dropped") {
+    // callers pass smallOnly only after bucketStats proved every in-cap
+    // bucket fits one chunk; an oversized bucket reaching it means that
+    // proof was wrong, and dropping its pairs would under-report near-dups
+    // while n_dropped_buckets still read 0
+    val kept = spark.range(10).select(
+      lit(0).as("band"), lit(42L).as("bh"), lit(10L).as("__bn"), struct(col("id")).as("x"))
+    val e = intercept[Exception] {
+      Dedup.chunkPairRows(kept, Seq("band", "bh"), chunkSize = 4, smallOnly = true).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("more than chunkSize = 4")), e.toString)
+    // within the bound: one collect_list row for the bucket
+    val rows = Dedup.chunkPairRows(kept, Seq("band", "bh"), chunkSize = 10, smallOnly = true)
+      .select(size(col("__xa"))).as[Int].collect()
+    assert(rows.toSeq == Seq(10))
+  }
+
   test("chunked pairs == unchunked: simhash output invariant under chunkSize") {
     val d = docs(150).cache()
     val whole = Dedup.simhashPairs(d, col("doc_id"), col("text"), maxHamming = 3)
@@ -473,6 +491,58 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(got.subsetOf(brute), s"false positives: ${got -- brute}")
     assert(got.size >= (brute.size * 9) / 10, s"recall ${got.size}/${brute.size} < 0.9")
     assert(brute.size >= 45, s"expected ~50 planted near-dup pairs, brute found ${brute.size}")
+    // output invariant under chunkSize: at 16 planes the 4-bit bands put
+    // ~34 of the 550 vectors in each bucket, so chunkSize = 4 sends them
+    // nearly all through the chunked path
+    for (planes <- Seq(64, 16)) {
+      def pairs(chunk: Int) = Dedup.embeddingNearDupQuantized(corpus, col("vec_id"), col("emb"),
+          planes = planes, chunkSize = chunk)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val whole = if (planes == 64) got else pairs(Dedup.DefaultChunkSize)
+      val chunked = pairs(4)
+      assert(chunked == whole, s"planes=$planes missing=${whole -- chunked} extra=${chunked -- whole}")
+    }
+    CacheTracker.releaseAll()
+  }
+
+  test("embedding drop path keeps a pair whose FIRST agreeing band's bucket was dropped") {
+    // planes = 8, bands = 2: band 0 = sig bits 0-3, band 1 = bits 4-7. The
+    // corpus is every seeded random vector whose band-0 value is the most
+    // common one, plus two more copies (ids 1, 2) of one of them: band 0 is
+    // ONE bucket holding the whole corpus, dropped at a cap that every
+    // band-1 bucket fits under. The copies agree on band 0 first, so the
+    // first-agreeing-band dedup would lose them — the engine must see the
+    // drop, take the groupBy dedup, and emit (1, 2) exactly once via band 1.
+    val band = (sig: org.apache.spark.sql.Column, b: Int) =>
+      shiftrightunsigned(sig, b * 4).bitwiseAND(lit(15L))
+    val pool = spark.range(4000).select(col("id").as("vec_id"), array((0 until 8).map(j =>
+        (pmod(st.mix64(col("id") * 8 + j), lit(2001L)) - 1000).cast("double")): _*).as("emb"))
+      .withColumn("sig", Ann.hyperplaneSig(col("emb"), 8))
+    val b0 = pool.groupBy(band(col("sig"), 0).as("b0")).count()
+      .orderBy(col("count").desc, col("b0")).first().getLong(0)
+    val flood = pool.filter(band(col("sig"), 0) === b0)
+      .withColumn("vec_id", col("vec_id") + 100L)
+    val twin = flood.orderBy("vec_id").limit(1)
+    val corpus = flood.unionByName(twin.withColumn("vec_id", lit(1L)))
+      .unionByName(twin.withColumn("vec_id", lit(2L))).cache()
+    val n = corpus.count()
+    val cap = corpus.groupBy(band(col("sig"), 1)).count().agg(max("count")).head().getLong(0)
+    assert(cap < n, s"band 1 must split the corpus (largest bucket $cap of $n)")
+    val got = Dedup.embeddingNearDup(corpus, col("vec_id"), col("emb"),
+        planes = 8, bands = 2, maxBucket = cap.toInt)
+      .select("id_a", "id_b", "n_dropped_buckets").as[(Long, Long, Long)].collect()
+    CacheTracker.releaseAll()
+    assert(got.count(p => p._1 == 1L && p._2 == 2L) == 1,
+      s"pair (1,2) must survive the dropped first band exactly once: ${got.toSeq}")
+    assert(got.forall(_._3 == 1L), s"exactly band 0's bucket dropped: ${got.toSeq}")
+    // brute: every pair sharing a band-1 value that passes the cosine bound
+    val side = (s: String) => corpus.select(col("vec_id").as(s"id_$s"), col("emb").as(s"e_$s"),
+      band(col("sig"), 1).as(s"b_$s"))
+    val brute = side("a").join(side("b"), col("b_a") === col("b_b") && col("id_a") < col("id_b"))
+      .filter(Ann.cosine(col("e_a"), col("e_b")) >= 0.95)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got.map(p => (p._1, p._2)).toSet == brute && got.length == brute.size,
+      s"engine=${got.length} brute=${brute.size}")
   }
 
   test("ivf ANN recall vs brute force >= 0.4 at probes=2") {
